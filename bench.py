@@ -300,6 +300,8 @@ def main() -> None:
             f"(cold {cold[key]:.3f}s, load {load:.1f})",
             file=sys.stderr, flush=True,
         )
+        # this attempt's own numbers, for the retry samples
+        return {"best": round(best, 4), "cold": round(first, 4), "load": load_at[key]}
 
     # r12 gate defense (a): don't start the suite under external load —
     # nothing of ours is running yet, so loadavg here is all contention.
@@ -311,16 +313,15 @@ def main() -> None:
 
     for key in HEADLINE:
         runs = GATED_RUNS if key in GATED else RUNS
-        timed(key, queries[key], runs)
+        sample = timed(key, queries[key], runs)
         # r12 gate defense (b): bar missed under elevated load → bounded
         # re-runs with cooldown; every sample lands in the artifact.
         bar = GATED_BARS.get(key)
         if bar is not None and timings[key] > bar and load_at[key] > GATE_LOAD_MAX:
-            samples = [{"best": timings[key], "load": load_at[key]}]
+            samples = [sample]
             for _ in range(GATE_RETRIES):
                 time.sleep(10)
-                timed(key, queries[key], runs)
-                samples.append({"best": timings[key], "load": load_at[key]})
+                samples.append(timed(key, queries[key], runs))
                 if timings[key] <= bar or load_at[key] <= GATE_LOAD_MAX:
                     break
             gate_retries[key] = samples
@@ -342,14 +343,9 @@ def main() -> None:
     tail_keys = [k for k in queries if k not in set(HEADLINE)]
     if os.environ.get("SPARK_GRAFT_BENCH_TAIL", "1") != "0":
         for key in tail_keys:
-            timed(key, queries[key], 1)
+            sample = timed(key, queries[key], 1)
             if timings[key] > TAIL_RETRY_SEC:
-                first_sample = {"best": timings[key], "load": load_at[key]}
-                timed(key, queries[key], 1)
-                tail_retries[key] = [
-                    first_sample,
-                    {"best": timings[key], "load": load_at[key]},
-                ]
+                tail_retries[key] = [sample, timed(key, queries[key], 1)]
 
     load_post_suite = round(os.getloadavg()[0], 2)
     total = round(sum(timings[k] for k in HEADLINE), 4)

@@ -75,29 +75,3 @@ def dmat_literal(vecs: Iterable[Sequence[float]]) -> Column:
         )
         + ")"
     )
-
-
-def centroids_literal(centroids: Iterable[tuple[int, Sequence[float]]]) -> Column:
-    """Materialize (cid, vector) pairs as a literal
-    ``array<struct<cid:int, cvec:array<double>>>`` column.
-
-    This is the Spark analogue of Flink's ``withBroadcastSet`` for the
-    centroid set (SURVEY.md §2A A4): k×d doubles embedded in the plan
-    means the assign step is a pure map — zero shuffle, zero join, and
-    the literal ships to every executor with the task closure. For
-    k=10, d=64 that is 640 doubles; trivially broadcastable at any
-    cluster size.
-    """
-    # One SQL-parsed expression, not k×d Py4J literal calls — same
-    # rationale and bit-exactness as dmat_literal (the old element-wise
-    # build cost ~90 ms per call × 10 Lloyd iterations at k=10,d=64).
-    return F.expr(
-        "array("
-        + ",".join(
-            "named_struct('cid',{},'cvec',array({}))".format(
-                int(cid), ",".join(_dlit(v) for v in vec)
-            )
-            for cid, vec in centroids
-        )
-        + ")"
-    )

@@ -11,15 +11,14 @@ Flink batch clustering example):
 - final assignment → ``(clusterId, point)``                   → :func:`predict`
 
 Scale design (SURVEY.md §4.3): the centroid set is k×d doubles, so it
-travels as a *plan literal* (``centroids_literal``) rather than a join
-side — the assign step is a pure narrow map over the points (no
-shuffle, no cross join). Each iteration then needs exactly ONE shuffle:
-the partial-aggregated ``groupBy(cid)`` of per-dimension sums, which
-moves k×(d+1) doubles per map partition regardless of data size. The
-driver collects k rows per iteration (the only collect anywhere). This
-is the same execution shape MLlib's own KMeans uses, and it is the
-shape that survives 100 TB: per-iteration network traffic is
-O(partitions × k × d), independent of row count.
+travels with the task (a one-row broadcast in :func:`assign`, a closure
+constant in :func:`_partial_sums_df`) rather than as a join side — the
+assign step is a pure narrow map over the points (no shuffle). Each
+iteration's partial sums move k×(d+1) doubles per Arrow batch regardless
+of data size, and the driver finishes the reduce. This is the same
+execution shape MLlib's own KMeans uses, and it is the shape that
+survives 100 TB: per-iteration network traffic is O(partitions × k × d),
+independent of row count.
 
 Empty-cluster policy: a cluster that attracts no points keeps its
 previous centroid (the canonical Flink example silently drops such ids
@@ -40,7 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import centroids_literal, sqdist
+from ..functions.vectors import sqdist
 
 Centroids = list[tuple[int, list[float]]]
 
@@ -58,18 +57,24 @@ def init_centroids(points: DataFrame, k: int, id_col: str = "vec_id", vec_col: s
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
 
 
-def nearest_centroid(vec: Column, cents: Centroids) -> Column:
-    """struct(dist, cid) of the nearest centroid — a pure map expression
-    over an inline centroid literal. Used for one-shot assigns; the
-    iteration loop uses :func:`assign`'s broadcast-parameter form so the
-    physical plan (and its generated code) is identical every step."""
-    cents_col = centroids_literal(cents)
-    return F.array_min(
-        F.transform(
-            cents_col,
-            lambda c: F.struct(sqdist(vec, c["cvec"]).alias("dist"), c["cid"].alias("cid")),
-        )
-    )
+def _make_nearest():
+    import numpy as np
+
+    def nearest(P, C):
+        """Nearest centroid of every row of ``P`` (n×d) among the rows of
+        ``C`` (k×d): (row positions in ``C``, squared distances). The
+        direct (p−c)² fold and ``argmin``'s first-minimum rule give the
+        NumPy oracle's bits and its lowest-id tie-break."""
+        d2 = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        pos = d2.argmin(axis=1)
+        return pos, d2[np.arange(len(pos)), pos]
+
+    return nearest
+
+
+# A closure (qualname ``_make_nearest.<locals>.nearest``), so the mapInPandas
+# functions that call it ship it to workers by value, not by reference.
+_nearest = _make_nearest()
 
 
 def assign(points: DataFrame, cents: Centroids, vec_col: str = "embedding") -> DataFrame:
@@ -80,9 +85,10 @@ def assign(points: DataFrame, cents: Centroids, vec_col: str = "embedding") -> D
     a BroadcastNestedLoopJoin with a single build row, i.e. a pure map
     with zero shuffle. Crucially the plan does not embed the centroid
     VALUES, so across fit iterations the generated code is byte-identical
-    and Spark's codegen cache hits (measured: 0.9 s/iter with inline
-    literals vs 0.45 s/iter with this shape at sf0.1 — recompilation was
-    the entire difference).
+    and Spark's codegen cache hits (inline literals recompiled every
+    step). As a Lloyd's step with :func:`recompute_centroids` it takes
+    0.85–1.2 s/iter at sf0.1 on local[4]; the loop uses
+    :func:`_partial_sums_df` instead.
 
     Adds ``cid`` (int) and ``dist`` (double, squared distance).
     """
@@ -138,14 +144,14 @@ def assign_arrow(
 ) -> DataFrame:
     """Bulk-scoring assign: Arrow-batched numpy argmin.
 
-    Same semantics as :func:`assign` (same direct (p−c)² fold as the
-    NumPy oracle, lowest-id tie-break via argmin) but 13× faster on wide
-    scans (measured 0.69 s vs 9.3 s for 2M×16-d rows at local[32]):
-    the JVM higher-order-function expression allocates a zipped array
-    per (row × centroid), while numpy does one vectorized pass per
-    Arrow batch. Use this for labeling whole tables; use :func:`assign`
-    when the result feeds further Catalyst expressions in the same
-    projection."""
+    Same semantics as :func:`assign` (the shared ``_nearest`` kernel:
+    the NumPy oracle's (p−c)² fold and lowest-id tie-break) but 13×
+    faster on wide scans (measured 0.69 s vs 9.3 s for 2M×16-d rows at
+    local[32]): the JVM higher-order-function expression allocates a
+    zipped array per (row × centroid), while numpy does one vectorized
+    pass per Arrow batch. Use this for labeling whole tables; use
+    :func:`assign` when the result feeds further Catalyst expressions in
+    the same projection."""
     import numpy as np
     import pandas as pd
 
@@ -157,14 +163,9 @@ def assign_arrow(
             if not len(pdf):
                 continue
             P = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d2 = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
+            a, dist = _nearest(P, C)
             yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cid": ids[a].astype("int32"),
-                    "dist": d2[np.arange(len(a)), a],
-                }
+                {id_col: pdf[id_col], "cid": ids[a].astype("int32"), "dist": dist}
             )
 
     return points.select(id_col, vec_col).mapInPandas(
@@ -180,9 +181,10 @@ def _partial_sums_df(points: DataFrame, centroids, vec_col: str = "embedding"):
     is MLlib's own treeAggregate shape: per-iteration traffic is
     O(batches × k × d) regardless of row count, there is NO shuffle
     stage, and the plan contains no iteration-dependent literals, so
-    nothing recompiles between steps (measured at sf0.1: 0.45 s/iter vs
-    0.9 s/iter for the pure-expression form — Python workers are reused
-    and the numpy argmin/matmul is vectorized over whole batches).
+    nothing recompiles between steps. Measured at sf0.1 on local[4]:
+    0.15–0.18 s/iter under ``get_spark``'s worker daemon (0.29–0.45 s
+    under the stock one, which re-reads Spark's archives every task) vs
+    0.85–1.2 s/iter for :func:`assign` + :func:`recompute_centroids`.
 
     The expression-based :func:`assign` remains the one-shot/predict
     path; this is the hot loop only.
@@ -198,8 +200,7 @@ def _partial_sums_df(points: DataFrame, centroids, vec_col: str = "embedding"):
             if len(pdf) == 0:
                 continue
             P = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d2 = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
+            a, _ = _nearest(P, C)
             rows = []
             for c in range(k):
                 m = a == c
@@ -249,11 +250,12 @@ def fit(
     shift drops below tol. None (default) preserves exact
     fixed-iteration reference semantics; all oracles use None.
 
-    r12 (guide §2.6 — fewer actions): the dimension used to be probed
-    with its own ``first()`` job; it is already carried by the init
-    centroids (the same data's vectors), so every fit consumer saves
-    one driver round-trip. The empty-input ValueError contract is
-    kept (an empty init collect raises it)."""
+    The dimension comes from the init centroids, so no job probes it.
+    Empty points raise ``ValueError("empty points input")``: from the
+    empty init collect, or, with an explicit ``init``, from the first
+    iteration's empty partials (every point yields one, so no extra
+    job runs). With an explicit ``init`` and ``n_iter=0`` no job runs
+    and ``init`` is returned unchecked."""
     pts = points.select(id_col, vec_col)
     pts.persist()
     try:
@@ -264,6 +266,8 @@ def fit(
         ids = [cid for cid, _ in cents]
         for _ in range(n_iter):
             partials = _partial_sums_df(pts, [v for _, v in cents], vec_col).collect()
+            if not partials:
+                raise ValueError("empty points input")
             sums: dict[int, list] = {}
             for r in partials:
                 acc = sums.setdefault(r["cid"], [0] + [0.0] * dim)

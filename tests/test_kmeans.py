@@ -77,6 +77,21 @@ def test_assign_arrow_equals_expression_assign(spark, points):
         .sort_values("vec_id")
     )
     assert (exp["cid"].to_numpy() == got["cid"].to_numpy()).all()
+    # dist is the oracle's own (p−c)² fold, bit for bit
+    init = np.array([v for _, v in cents])
+    d2 = ((pts[:, None, :] - init[None, :, :]) ** 2).sum(axis=2)
+    dist = km.assign_arrow(df, cents).toPandas().sort_values("vec_id")["dist"]
+    assert (dist.to_numpy() == d2[np.arange(len(pts)), d2.argmin(axis=1)]).all()
+
+
+def test_fit_empty_points_raises(spark, points):
+    """Empty points raise with or without an explicit init; with one, the
+    first iteration's empty partials are what detect it."""
+    df, _, _ = points
+    init = km.init_centroids(df, K)
+    for kwargs in ({}, {"init": init}):
+        with pytest.raises(ValueError, match="empty points input"):
+            km.fit(df.limit(0), k=K, n_iter=2, **kwargs)
 
 
 def test_fit_tol_early_stop_matches_converged(spark, points):
