@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import scratch_dir
 from ..sources import load_table
 from .registry import register
 
@@ -760,8 +761,6 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline logs; the oracle recomputes it from the clean source via
     the same modular conditions. Corrupt rows quarantine at scan
     grain, map-side — no shuffle touches them."""
-    from .relational import _scratch_dir
-
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
     lines = o.select(
         F.when(
@@ -783,7 +782,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    path = _scratch_dir("csv_permissive") + "/orders_csv"
+    path = scratch_dir("csv_permissive") + "/orders_csv"
     lines.write.mode("overwrite").text(path)
     schema = (
         "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, "
@@ -831,9 +830,7 @@ def scan_jsonl_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl dumps arrive; Spark parallelizes across shards (here one per
     input partition), the 100 TB recipe being many ~100 MB .gz shards
     rather than few large ones."""
-    from .relational import _scratch_dir
-
-    out = _scratch_dir("scan_jsonl_gz") + "/docs"
+    out = scratch_dir("scan_jsonl_gz") + "/docs"
     (
         _t(spark, sf_dir, "documents")
         .select("doc_id", "lang", "text")
@@ -2117,10 +2114,8 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     nulls-vs-present and must match recomputing from the unioned
     source. Schema merge happens at PLANNING time (footer union);
     per-file projections adapt at scan, no rewrite of old files."""
-    from .relational import _scratch_dir
-
     o = _t(spark, sf_dir, "orders")
-    out = _scratch_dir("schema_evo") + "/orders_evo"
+    out = scratch_dir("schema_evo") + "/orders_evo"
     gen1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderpriority"
     )
@@ -2318,10 +2313,8 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     column loads lazily per matched file)."""
     import os
 
-    from .relational import _scratch_dir
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 == 0)
-    base = _scratch_dir("binfiles")
+    base = scratch_dir("binfiles")
     fdir = base + "/blobs"
     os.makedirs(fdir, exist_ok=True)
 
@@ -3370,10 +3363,8 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both write and read are embarrassingly parallel per
     part-file/line; the only aggregation is the final 1-row audit (the
     distinct rides the same exchange)."""
-    from .relational import _scratch_dir
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    out = _scratch_dir("textlines") + "/docs_txt"
+    out = scratch_dir("textlines") + "/docs_txt"
     # newline-proof the one-doc-per-line contract: embedded newlines in
     # a regenerated corpus would otherwise split docs across lines and
     # silently break the audit (same discipline on the oracle side)
@@ -3590,9 +3581,9 @@ def sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cold archives ~2× smaller, snappy for hot scan paths) verified as
     lossless. All three rewrites are narrow scan→write jobs; the
     audits are 1-row aggregates."""
-    from .relational import _scratch_dir, _t
+    from .relational import _t
 
-    base = _scratch_dir("codecs")
+    base = scratch_dir("codecs")
     o = _t(spark, sf_dir, "orders").select("o_orderkey")
     outs = []
     for codec in ("snappy", "zstd", "gzip"):
@@ -3997,8 +3988,6 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs = the z-curve order) + in-partition sort, the identical plan
     OPTIMIZE ZORDER runs per file group at 100 TB. The audit re-reads
     the written files and aggregates by z-bucket with map-side combine."""
-    from .relational import _scratch_dir
-
     o = _t(spark, sf_dir, "orders")
     stats = o.agg(
         F.max("o_custkey").alias("cmax"),
@@ -4028,7 +4017,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("zval", F.expr(_Z_SPARK))
         .select("o_orderkey", "o_custkey", "day", "zval")
     )
-    out = _scratch_dir("zorder") + "/orders_z"
+    out = scratch_dir("zorder") + "/orders_z"
     zed.repartitionByRange(8, "zval").sortWithinPartitions("zval").write.mode(
         "overwrite"
     ).parquet(out)
@@ -4677,43 +4666,27 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched partitions). State never crosses the driver; the final
     read aggregates the last generation only."""
     import os
-    import shutil
-    import tempfile
-    import time as _time
+    import time
 
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import ensure_conf
+    from ..streaming.jobs import drain, land_arrivals
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.perf_counter()
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="cdc_stream_", dir=base)
-    protect_scratch(root)
+    root = scratch_dir("cdc_stream")
     landing = os.path.join(root, "landing")
     state = os.path.join(root, "state")
     ckpt = os.path.join(root, "ckpt")
     init = os.path.join(root, "init")
-    os.makedirs(landing, exist_ok=True)
     o.select(
         "o_orderkey",
         "o_orderpriority",
         F.col("o_totalprice").alias("price"),
     ).write.mode("overwrite").parquet(init)
-    # one corpus pass builds the three ordered change files (the
-    # streaming_minhash_dedup shard discipline: range-repartition by
-    # seq → exactly one part file per seq dir, loud guard otherwise)
+    # the three ordered change files, built in one corpus pass
     changes = (
         o.filter(F.col("o_orderkey") % 17 == 0)
         .select(
@@ -4744,22 +4717,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    tmp = os.path.join(root, "seq_build")
-    changes.repartitionByRange(3, "seq").write.mode("overwrite").partitionBy(
-        "seq"
-    ).parquet(tmp)
-    for s in range(3):
-        sdir = os.path.join(tmp, f"seq={s}")
-        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"streaming_cdc_apply: seq {s} wrote {len(parts)} part "
-                "files; expected exactly 1"
-            )
-        dst = os.path.join(landing, f"seq{s}.parquet")
-        os.replace(os.path.join(sdir, parts[0]), dst)
-        os.utime(dst, (1_000_000_000.0 + s * 100, 1_000_000_000.0 + s * 100))
-    shutil.rmtree(tmp)
+    list(land_arrivals(changes, "seq", range(3), landing))
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         prev_path = (
@@ -4787,31 +4745,13 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"gen={batch_id}")
         )
 
-    schema = changes.schema
-    _t_drain = _time.time()
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(changes.schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_cdc_apply did not drain change batches in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_cdc_apply"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
+    drain(stream.writeStream.foreachBatch(apply), "streaming_cdc_apply", ckpt, t0)
     gens = sorted(
         int(d.split("=")[1])
         for d in os.listdir(state)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import scratch_dir
 from ..sources import load_table
 from .registry import register
 
@@ -373,8 +374,6 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from broadcasting the small side at test scale, which would hide
     the property being demonstrated. Result is bucketing-independent,
     hence the plain-SQL oracle."""
-    from ..plans.relational import _scratch_dir
-
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     tag = abs(hash(sf_dir)) % 10**8
@@ -386,7 +385,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 df.write.bucketBy(8, key)
                 .sortBy(key)
-                .option("path", _scratch_dir(tbl))
+                .option("path", scratch_dir(tbl))
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
@@ -3278,62 +3277,28 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-grain merge) decomposed through foreachBatch exactly like
     streaming_minhash_dedup (plans/llm.py)."""
     import os
-    import shutil
-    import tempfile
-    import time as _time
+    import time
 
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import ensure_conf
+    from ..streaming.jobs import drain, land_arrivals
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.perf_counter()
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_extendedprice").cast("double").alias("x")
     )
-    schema = li.schema
-    base = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="dds_stream_", dir=base)
-    protect_scratch(root)
+    root = scratch_dir("dds_stream")
     landing = os.path.join(root, "landing")
     ledger = os.path.join(root, "ledger")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing, exist_ok=True)
-    # three arrival shards in ONE corpus pass (the streaming_minhash_dedup
-    # scaffold shape: range-repartition puts each shard in exactly one
-    # task -> one part file per shard dir, renamed with increasing mtimes
-    # so maxFilesPerTrigger=1 drains them as ordered micro-batches)
-    tmp = os.path.join(root, "shard_build")
-    (
-        li.withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(3)))
-        .repartitionByRange(3, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
+    # three l_orderkey arrival shards, built in one corpus pass
+    list(
+        land_arrivals(
+            li.withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(3))),
+            "shard",
+            range(3),
+            landing,
+        )
     )
-    for s in range(3):
-        sdir = os.path.join(tmp, f"shard={s}")
-        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"streaming_quantile_sketch: shard {s} wrote {len(parts)} "
-                "part files; expected exactly 1"
-            )
-        dst = os.path.join(landing, f"shard{s}.parquet")
-        os.replace(os.path.join(sdir, parts[0]), dst)
-        os.utime(dst, (1_000_000_000.0 + s * 100, 1_000_000_000.0 + s * 100))
-    shutil.rmtree(tmp)
-    _t_drain = _time.time()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         _dds_buckets(batch_df.select("x")).write.mode("overwrite").parquet(
@@ -3341,28 +3306,17 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(li.schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(fold),
+        "streaming_quantile_sketch",
+        os.path.join(root, "ckpt"),
+        t0,
     )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_quantile_sketch did not drain shards in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_quantile_sketch"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
     led = spark.read.option("recursiveFileLookup", "true").parquet(ledger)
     merged = led.groupBy("bucket").agg(F.sum("c").alias("c"))
     return _dds_quantiles(spark, merged)

@@ -86,7 +86,7 @@ def _drain(df, prefix: str):
 
     _STREAM_RUN[0] += 1
     # complete-mode aggregations: the no-data batch re-emits the same
-    # full aggregate — skip it (see _no_data_batches_disabled)
+    # full aggregate — skip it (see run_available_now)
     return run_available_now(
         df, f"{prefix}_{_STREAM_RUN[0]}", skip_no_data_batch=True
     )

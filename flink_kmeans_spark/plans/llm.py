@@ -1938,7 +1938,7 @@ def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> str:
         spark, "ann_index_", tbl,
         match=lambda name: name.count("_") == 2,  # ann_index_<tag> only
     )
-    # The index lives OUTSIDE .scratch on purpose: every _scratch_dir()
+    # The index lives OUTSIDE .scratch on purpose: every scratch_dir()
     # call GCs .scratch subdirs older than 2h, which would delete the
     # index files underneath a still-live catalog entry (tableExists
     # would then short-circuit the rebuild and probes would read a
@@ -4694,21 +4694,16 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     file stream is the lakehouse serving pattern; swapping in a Kafka
     source changes one line of the reader."""
     import os
-    import tempfile
-    import time as _time
+    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import ensure_conf, scratch_dir
+    from ..streaming.jobs import drain, stamp_arrival
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.perf_counter()
     tbl = _ann_index_ensure(spark, sf_dir)
     s2 = spark.newSession()  # shared catalog; own SQLConf for the stream
     s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
@@ -4717,16 +4712,8 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect(),
         key=lambda r: r["vec_id"],
     )
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="ann_probe_stream_", dir=base)
-    protect_scratch(root)  # returned frame lazily reads root/result
-    landing, ckpt = f"{root}/landing", f"{root}/ckpt"
-    out = f"{root}/result"
+    root = scratch_dir("ann_probe_stream")  # returned frame reads root/result
+    landing, out = f"{root}/landing", f"{root}/result"
     os.makedirs(landing, exist_ok=True)
     for i, (name, rows) in enumerate(
         (("qa.parquet", qrows[:5]), ("qb.parquet", qrows[5:]))
@@ -4739,7 +4726,7 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         path = os.path.join(landing, name)
         pq.write_table(t, path)
-        os.utime(path, (1_000_000_000.0 + i * 100, 1_000_000_000.0 + i * 100))
+        stamp_arrival(path, i)
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.collect()  # ≤ 5 queries per arriving batch
@@ -4759,30 +4746,18 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{out}/batch={batch_id}"
         )
 
-    _t_drain = _time.time()
     stream = (
         s2.readStream.schema("vec_id long, bucket int")
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(probe),
+        "streaming_ann_probe",
+        f"{root}/ckpt",
+        t0,
     )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_ann_probe did not drain queries in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_ann_probe"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
     return spark.read.option("recursiveFileLookup", "true").parquet(out)
 
 
@@ -4955,65 +4930,27 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one query — the foreachBatch ledger IS the idiomatic
     decomposition."""
     import os
-    import shutil
-    import tempfile
-    import time as _time
+    import time
 
     from ..operators.dedup import minhash_signatures
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import ensure_conf, scratch_dir
+    from ..streaming.jobs import drain, land_arrivals
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.perf_counter()
     docs_static = _docs(spark, sf_dir)
-    schema = docs_static.schema
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="mh_stream_", dir=base)
-    protect_scratch(root)
+    root = scratch_dir("mh_stream")
     landing = os.path.join(root, "landing")
     ledger = os.path.join(root, "ledger")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing, exist_ok=True)
-    # three arrival shards, written executor-side in ONE corpus pass
-    # (partitionBy over a range-repartition puts each shard value in
-    # exactly one task → exactly one part file per shard dir), then
-    # renamed into the landing dir as single files with strictly
-    # increasing mtimes so maxFilesPerTrigger=1 drains them as three
-    # ordered micro-batches (the previous per-shard filter+coalesce(1)
-    # loop scanned the corpus three times)
-    tmp = os.path.join(root, "shard_build")
-    (
-        docs_static.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(3)))
-        .repartitionByRange(3, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
+    # three doc_id arrival shards, built in one corpus pass
+    list(
+        land_arrivals(
+            docs_static.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(3))),
+            "shard",
+            range(3),
+            landing,
+        )
     )
-    for s in range(3):
-        sdir = os.path.join(tmp, f"shard={s}")
-        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            # range sampling put two shard values in one task (possible
-            # in principle on tiny inputs) — a lost part file would be a
-            # silent wrong answer, so fail loudly; callers retry
-            raise RuntimeError(
-                f"streaming_minhash_dedup: shard {s} wrote {len(parts)} "
-                "part files; expected exactly 1"
-            )
-        dst = os.path.join(landing, f"shard{s}.parquet")
-        os.replace(os.path.join(sdir, parts[0]), dst)
-        os.utime(dst, (1_000_000_000.0 + s * 100, 1_000_000_000.0 + s * 100))
-    shutil.rmtree(tmp)
-    _t_drain = _time.time()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         partial = (
@@ -5027,28 +4964,17 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial.write.mode("overwrite").parquet(f"{ledger}/batch={batch_id}")
 
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(docs_static.schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(fold),
+        "streaming_minhash_dedup",
+        os.path.join(root, "ckpt"),
+        t0,
     )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_minhash_dedup did not drain shards in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_minhash_dedup"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
     led = spark.read.option("recursiveFileLookup", "true").parquet(ledger)
     return led.groupBy("minhash").agg(
         F.min("doc_id").alias("doc_id"), F.sum("cnt").alias("n_members")

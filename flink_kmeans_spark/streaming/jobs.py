@@ -10,14 +10,38 @@ ingestion of a landing directory.
 
 Tests assert the streaming results EQUAL the batch results on the same
 input — the strongest available oracle for streaming semantics.
+
+Every streaming path here and in ``plans/`` is built from three
+primitives:
+
+- ``session.scratch_dir(name)`` — a fresh, prune-protected dir under
+  the repo's ``.scratch`` for landing, checkpoint and sink files;
+- :func:`land_arrivals` — one ``partitionBy`` pass that lands a frame
+  as one file per arrival value, in order (:func:`stamp_arrival` gives
+  driver-written files the same mtime ordering);
+- :func:`drain` — one availableNow query under
+  ``$SPARK_GRAFT_STREAM_TIMEOUT``, recording ``session.PHASE_WALLS``.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+from contextlib import contextmanager, nullcontext
+from typing import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from ..session import ensure_conf
+from ..session import PHASE_WALLS, ensure_conf, scratch_dir
+
+_ROCKSDB = (
+    "spark.sql.streaming.stateStore.providerClass",
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+)
+_NO_DATA_BATCHES = ("spark.sql.streaming.noDataMicroBatches.enabled", "false")
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -40,8 +64,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     would route object-store directory tables into the glob branch and
     silently stream zero rows (ADVICE r6). Local-path fallback only if
     the JVM call is unavailable."""
-    import os
-
     schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
     p = f"{sf_dir}/{name}.parquet"
     try:
@@ -271,20 +293,13 @@ def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
     makes event-time aggregation feasible on an unbounded 100 TB/day
     stream. The 02:00 window never emits (watermark never passes it) —
     also part of the contract."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     ensure_conf(spark)
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "late_landing",
-    )
-    os.makedirs(base, exist_ok=True)
+    base = scratch_dir("late_landing")
 
-    def _write(name: str, minutes: list, mtime: float) -> None:
+    def _write(name: str, minutes: list, i: int) -> None:
         us = [m * 60_000_000 for m in minutes]  # minutes past 2000-01-01 00:00 UTC
         epoch = 946_684_800_000_000  # 2000-01-01 UTC in µs
         tbl = pa.table(
@@ -295,11 +310,11 @@ def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
         )
         path = os.path.join(base, name)
         pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
+        stamp_arrival(path, i)
 
-    _write("batch1.parquet", [1, 2, 25, 55], 1_000_000_000.0)
-    _write("batch2.parquet", [56], 1_000_000_100.0)  # filler: wm takes effect
-    _write("batch3.parquet", [3, 120], 1_000_000_200.0)  # 00:03 is LATE
+    _write("batch1.parquet", [1, 2, 25, 55], 0)
+    _write("batch2.parquet", [56], 1)  # filler: wm takes effect
+    _write("batch3.parquet", [3, 120], 2)  # 00:03 is LATE
 
     stream = (
         spark.readStream.schema("ts timestamp, event_id long")
@@ -315,70 +330,107 @@ def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
     )
 
 
-from contextlib import contextmanager
+def stamp_arrival(path: str, i: int) -> None:
+    """Give the ``i``-th arrival of a landing dir its mtime: 100 s apart
+    from 2001-09-09, strictly increasing in ``i``. The file source
+    orders new files by mtime, so a ``maxFilesPerTrigger=1`` drain
+    reads the arrivals as ordered micro-batches."""
+    t = 1_000_000_000.0 + i * 100
+    os.utime(path, (t, t))
 
 
-@contextmanager
-def rocksdb_state(spark: SparkSession):
-    """Pin the RocksDB state store provider for the duration of a
-    streaming query start (the conf is captured at .start(); restored
-    after the drain so the caller's session is left untouched).
+def land_arrivals(df: DataFrame, col: str, values, landing: str) -> Iterator:
+    """Land ``df`` in ``landing`` as one parquet file per value of
+    ``col``, in ``values`` order. The returned iterator is lazy: each
+    step moves the next value's file in as ``<col><value>.parquet``,
+    stamps it with :func:`stamp_arrival`, and yields its path — or
+    ``None`` when the value has no rows (ADVICE r12 #1). Callers that
+    land every arrival up front take ``list(...)``;
+    :func:`run_checkpoint_resume` drains between steps.
 
-    WHY (r7 100× probe catch): the default HDFSBackedStateStoreProvider
-    keeps every partition's state map ON-HEAP. An availableNow drain of
-    a static table processes all files in one micro-batch, so the
-    watermark never gets a chance to evict — session state for the
-    ENTIRE input materializes at once, which OOMed the single-JVM 8 g
-    driver at 100× data (streaming_session_window, ~100 M events).
-    RocksDB keeps state off-heap/on-disk per partition — the standard
-    production choice for large-state Structured Streaming — and the
-    same drain completes in bounded heap. Results are bit-identical;
-    only the state backend changes."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    All arrivals are built in ONE pass over ``df``, not one scan per
+    arrival: ``repartitionByRange(len(values), col)`` and a
+    ``partitionBy(col)`` write to a staging dir beside
+    ``landing``, removed after the last arrival. Range partitioning
+    typically gives each value its own task — the bounds come from
+    sampling — and a value that still wrote more than one part file
+    raises, since landing only one of them would be a silent wrong
+    answer."""
+    values = list(values)
+    stage = landing.rstrip("/") + "_stage"
+    (
+        df.repartitionByRange(len(values), col)
+        .write.mode("overwrite")
+        .partitionBy(col)
+        .parquet(stage)
     )
+    os.makedirs(landing, exist_ok=True)
+    for i, v in enumerate(values):
+        vdir = os.path.join(stage, f"{col}={v}")
+        if not os.path.isdir(vdir):
+            yield None
+            continue
+        parts = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"land_arrivals: {col}={v} wrote {len(parts)} part files; "
+                "expected exactly 1"
+            )
+        dst = os.path.join(landing, f"{col}{v}.parquet")
+        os.replace(os.path.join(vdir, parts[0]), dst)
+        stamp_arrival(dst, i)
+        yield dst
+    shutil.rmtree(stage)
+
+
+def drain(writer: DataStreamWriter, name: str, ckpt: str, t0: float) -> None:
+    """Run ``writer`` — a configured ``foreachBatch`` or file sink — as
+    one availableNow query checkpointed at ``ckpt``, and record
+    ``PHASE_WALLS[name]``: ``scaffold_s`` from ``t0`` (the caller's
+    ``time.perf_counter()`` at its start) to the query start,
+    ``drain_s`` for the drain, and ``batches``, the micro-batches that
+    read input rows.
+
+    The wait is ``$SPARK_GRAFT_STREAM_TIMEOUT`` seconds (default 120;
+    the 100× probe needs more). A query still running then is stopped
+    and raises ``TimeoutError``: returning would hand back a PARTIAL
+    result, a wrong answer rather than an error.
+
+    No other query may be active on the session: a session conf pinned
+    around the drain (:func:`_pinned_conf`) is read by every query that
+    starts while it is set (VERDICT r12 #5)."""
+    active = writer._spark.streams.active
+    if active:
+        raise RuntimeError(
+            f"stream {name!r}: {len(active)} streaming queries already "
+            "active on this session; drains run one at a time"
+        )
+    t_drain = time.perf_counter()
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    timeout = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
     try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, rocks)
-    try:
-        yield
+        if not q.awaitTermination(timeout):
+            raise TimeoutError(
+                f"stream {name!r} did not drain available data in {timeout}s"
+            )
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        q.stop()
+    PHASE_WALLS[name] = {
+        "scaffold_s": round(t_drain - t0, 3),
+        "drain_s": round(time.perf_counter() - t_drain, 3),
+        "batches": sum(p.numInputRows > 0 for p in q.recentProgress),
+    }
 
 
 @contextmanager
-def _no_data_batches_disabled(spark: SparkSession):
-    """Pin ``noDataMicroBatches.enabled=false`` for one query start
-    (captured at .start(); restored after the drain).
-
-    r12 (VERDICT r11 item 6): the availableNow drain of a static table
-    runs batch 0 (all data) plus one ZERO-ROW no-data batch whose only
-    job is advancing the watermark — profiled at 0.9–1.4 s per drain
-    (addBatch over empty input still opens/commits every state-store
-    partition). For queries whose OUTPUT cannot depend on that batch —
-    eager-emitting append operators (dedup, inner joins, stateless
-    maps), complete-mode aggregations (state never evicted, each
-    trigger re-emits everything), and the update-mode counter (no
-    input ⇒ no changed groups, NoTimeout ⇒ no timer fires) — skipping
-    it is results-identical and removes a whole micro-batch of
-    state-store round-trips. It is NOT safe for append-mode windowed
-    aggregations (streaming_late_data), where the no-data batch is what
-    flushes finalized windows — that key keeps the default. This is a
-    semantics-scoped batch-count reduction, valid at any scale, not a
-    local-core-count tune."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+def _pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set session conf ``key`` for one query start (confs are captured
+    at ``.start()``), then restore the caller's value, or unset it."""
     try:
         prev = spark.conf.get(key)
     except Exception:
         prev = None
-    spark.conf.set(key, "false")
+    spark.conf.set(key, value)
     try:
         yield
     finally:
@@ -392,14 +444,31 @@ def run_available_now(
     df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    timeout_sec: int = 120,
     skip_no_data_batch: bool = False,
 ) -> DataFrame:
-    """Drain the stream with the availableNow trigger and return the
-    result as a DataFrame (test/driver harness helper). Checkpoints
-    live under the repo's .scratch (the build environment forbids
-    writes outside /root/repo). State runs on RocksDB (see
-    rocksdb_state).
+    """Drain the stream with the availableNow trigger (:func:`drain`)
+    and return the result as a DataFrame (test/driver harness helper).
+
+    State runs on RocksDB (r7 100× probe catch): the default
+    HDFSBackedStateStoreProvider keeps every partition's state map
+    ON-HEAP, and an availableNow drain of a static table processes all
+    files in one micro-batch, so the watermark never gets a chance to
+    evict — session state for the ENTIRE input materialized at once and
+    OOMed the single-JVM 8 g driver at 100× data
+    (streaming_session_window, ~100 M events). RocksDB keeps state
+    off-heap/on-disk per partition; results are bit-identical.
+
+    ``skip_no_data_batch`` (r12, VERDICT r11 item 6) disables the
+    ZERO-ROW no-data batch that follows the data batch only to advance
+    the watermark — 0.9–1.4 s per drain, since addBatch over empty
+    input still opens/commits every state-store partition. It is
+    results-identical only where OUTPUT cannot depend on that batch:
+    eager-emitting append operators (dedup, inner joins, stateless
+    maps), complete-mode aggregations (each trigger re-emits
+    everything), and the update-mode counter (no input ⇒ no changed
+    groups, NoTimeout ⇒ no timer fires). NOT for append-mode windowed
+    aggregations (streaming_late_data), where the no-data batch is what
+    flushes finalized windows.
 
     The result is staged to PARQUET from inside ``foreachBatch`` — an
     executor-side distributed write. The previous memory-sink harness
@@ -410,29 +479,10 @@ def run_available_now(
     plan, was the bottleneck). foreachBatch honours the query's output
     mode, so complete mode still replaces the staged result per trigger
     and the last trigger holds the full aggregate — results are
-    bit-identical to the memory sink at every scale that fit it.
-
-    ``timeout_sec`` can be overridden with $SPARK_GRAFT_STREAM_TIMEOUT
-    (the 100× probe needs more than two minutes of drain)."""
-    import os
-    import tempfile
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    from ..session import protect_scratch, prune_scratch
-
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", timeout_sec))
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=base)
-    sink_root = tempfile.mkdtemp(prefix=f"sink_{name}_", dir=base)
-    out = sink_root + "/result"
-    # The returned DataFrame is a LAZY read over this sink — protect it
-    # from prune_scratch for the life of the process so a handle held
-    # across a long session never loses its files (ADVICE r7).
-    protect_scratch(sink_root)
+    bit-identical to the memory sink at every scale that fit it."""
+    t0 = time.perf_counter()
+    root = scratch_dir(f"sink_{name}")
+    out = root + "/result"
     spark = df.sparkSession
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
@@ -447,27 +497,15 @@ def run_available_now(
         else:
             batch_df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    from contextlib import nullcontext
-
-    with rocksdb_state(spark), (
-        _no_data_batches_disabled(spark) if skip_no_data_batch else nullcontext()
+    with _pinned_conf(spark, *_ROCKSDB), (
+        _pinned_conf(spark, *_NO_DATA_BATCHES) if skip_no_data_batch else nullcontext()
     ):
-        q = (
-            df.writeStream.foreachBatch(stage)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            df.writeStream.foreachBatch(stage).outputMode(output_mode),
+            name,
+            f"{root}/ckpt",
+            t0,
         )
-        # awaitTermination returns False on timeout — stopping then would
-        # truncate the availableNow drain and silently return a PARTIAL
-        # result (a wrong answer, not an error). Fail loudly instead.
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"stream {name!r} did not drain available data in {timeout_sec}s"
-            )
-        q.stop()
     have_files = os.path.isdir(out) and any(
         f.endswith(".parquet")
         for _, _, names in os.walk(out)
@@ -484,9 +522,7 @@ def run_available_now(
     return spark.read.option("recursiveFileLookup", "true").parquet(out)
 
 
-def run_foreach_batch_upsert(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
-) -> DataFrame:
+def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``foreachBatch`` sink — the production pattern for targets with
     no native streaming writer (JDBC upserts, MERGE INTO a lakehouse
     table): each micro-batch is handed to arbitrary BATCH logic with a
@@ -499,22 +535,9 @@ def run_foreach_batch_upsert(
     second copy, so replays never double-apply. The returned frame is
     the post-drain merge: per-user totals + last-writer-wins latest
     value across batches."""
-    import os
-    import tempfile
-
-    from ..session import protect_scratch, prune_scratch
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    stage_root = tempfile.mkdtemp(prefix="fbu_stage_", dir=base)
-    stage = stage_root + "/partials"
-    protect_scratch(stage_root)  # returned frame lazily reads this dir
-    ckpt = tempfile.mkdtemp(prefix="fbu_ckpt_", dir=base)
-
+    t0 = time.perf_counter()
+    root = scratch_dir("fbu")
+    stage = root + "/partials"
     ev = stream_events(spark, sf_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -531,17 +554,12 @@ def run_foreach_batch_upsert(
             .parquet(stage)
         )
 
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ev.writeStream.foreachBatch(apply_batch),
+        "streaming_foreach_batch",
+        f"{root}/ckpt",
+        t0,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"foreachBatch stream did not drain in {timeout_sec}s")
-    q.stop()
-
     staged = spark.read.parquet(stage)
     return staged.groupBy("user_id").agg(
         F.sum("pn").alias("n_events"),
@@ -555,9 +573,7 @@ def run_foreach_batch_upsert(
     )
 
 
-def run_checkpoint_resume(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
-) -> DataFrame:
+def run_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once incremental ingestion with CHECKPOINT RESUME: the
     landing directory receives files in two arrivals; each arrival is
     drained by a SEPARATE availableNow query sharing one checkpoint
@@ -566,69 +582,42 @@ def run_checkpoint_resume(
     so the sink holds every event exactly once (the crash/restart
     guarantee a 100 TB ingestion pipeline leans on; identity oracle
     over the source proves it)."""
-    import os
-    import tempfile
-
-    from ..session import protect_scratch, prune_scratch
     from ..sources.tables import _normalize_event_ts
 
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="ckpt_resume_", dir=base)
-    protect_scratch(root)  # returned frame lazily reads root/sink
+    t0 = time.perf_counter()
+    root = scratch_dir("ckpt_resume")
     landing, ckpt, sink = f"{root}/landing", f"{root}/ckpt", f"{root}/sink"
-    os.makedirs(landing, exist_ok=True)
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     schema = ev.schema
-    # two deterministic arrivals (disjoint, exhaustive), built in ONE
-    # corpus pass (r12, guide §2.4 — the old per-arrival filter +
-    # coalesce(1) writes scanned events twice): partitionBy lands each
-    # arrival in its own directory with one file (repartitionByRange
-    # guarantees the two arrival values never share a task), and
-    # arrival 2 is STAGED outside the landing dir until drain 1 has
-    # completed — the resume semantics (drain 1 must not see arrival 2)
-    # are enforced by the os-level move, exactly as a real landing
-    # directory receives files.
-    stage_arrivals = f"{root}/arrivals_stage"
-    (
+    # two deterministic arrivals (disjoint, exhaustive) built in one
+    # pass; arrival 2 stays staged until drain 1 has completed — the
+    # resume semantics (drain 1 must not see arrival 2) are enforced by
+    # the os-level move, exactly as a real landing directory receives
+    # files
+    arrivals = land_arrivals(
         ev.withColumn(
             "arrival",
             F.when(F.col("event_id") % 2 == 0, F.lit(1)).otherwise(F.lit(2)),
-        )
-        .repartitionByRange(2, "arrival")
-        .write.mode("overwrite")
-        .partitionBy("arrival")
-        .parquet(stage_arrivals)
+        ),
+        "arrival",
+        (1, 2),
+        landing,
     )
-    os.replace(f"{stage_arrivals}/arrival=1", f"{landing}/arrival=1")
-    first = True
-    for arrival in (1, 2):
-        if not first:
-            os.replace(f"{stage_arrivals}/arrival=2", f"{landing}/arrival=2")
-        first = False
+    for arrival, _ in enumerate(arrivals, 1):
         stream = _normalize_event_ts(
             spark.readStream.schema(schema)
             .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
             .parquet(landing)
         )
-        q = (
+        drain(
             stream.writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            f"streaming_checkpoint_resume_arrival{arrival}",
+            ckpt,
+            t0,
         )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(f"arrival {arrival} did not drain in {timeout_sec}s")
-        q.stop()
+        t0 = time.perf_counter()
     return spark.read.parquet(sink).select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")
     )

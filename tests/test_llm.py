@@ -9,6 +9,7 @@ from flink_kmeans_spark.operators import dedup as DD
 from flink_kmeans_spark.operators import multimodal as MM
 from flink_kmeans_spark.operators import similarity as SIM
 from flink_kmeans_spark.plans.registry import specs
+from flink_kmeans_spark.session import PHASE_WALLS
 from flink_kmeans_spark.sources import load_table
 from conftest import SCRATCH_DIR
 
@@ -1040,6 +1041,7 @@ def test_streaming_ann_probe_micro_batches(spark, sf_dir):
         os.path.basename(p) for p in glob.glob(f"{result_root}/batch=*")
     )
     assert batch_dirs == ["batch=0", "batch=1"]
+    assert PHASE_WALLS["streaming_ann_probe"]["batches"] == 2
     assert all(r["rk"] in (1, 2, 3) for r in rows)
     by_q = {}
     for r in rows:
@@ -1129,6 +1131,7 @@ def test_streaming_minhash_dedup_ledger(spark, sf_dir):
         if b.startswith("batch=")
     ]
     assert len(batches) == 3
+    assert PHASE_WALLS["streaming_minhash_dedup"]["batches"] == 3
 
 
 def test_dedup_substring_cut_mechanics(spark, tmp_path):

@@ -162,6 +162,8 @@ def test_streaming_cdc_apply_generations_and_batch_parity(spark, sf_dir):
     import glob
     import os
 
+    from flink_kmeans_spark.session import PHASE_WALLS
+
     got = _norm(specs()["streaming_cdc_apply"].fn(spark, sf_dir).toPandas())
     want = _norm(specs()["cdc_merge_apply"].fn(spark, sf_dir).toPandas())
     # batch key emits the same (pri, n_rows, total_price) aggregate
@@ -174,6 +176,7 @@ def test_streaming_cdc_apply_generations_and_batch_parity(spark, sf_dir):
     state = os.path.join(roots[-1], "state")
     gens = sorted(d for d in os.listdir(state) if d.startswith("gen="))
     assert gens == ["gen=0", "gen=1", "gen=2"]
+    assert PHASE_WALLS["streaming_cdc_apply"]["batches"] == 3
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     n_orders = orders.count()
     n_dels = orders.filter("o_orderkey % 17 = 0").count()
@@ -190,6 +193,7 @@ def test_streaming_quantile_sketch_ledger_equals_batch(spark, sf_dir):
     import os
 
     from flink_kmeans_spark.plans.registry import specs
+    from flink_kmeans_spark.session import PHASE_WALLS
 
     got = sorted(
         tuple(r) for r in specs()["streaming_quantile_sketch"].fn(spark, sf_dir).collect()
@@ -205,3 +209,121 @@ def test_streaming_quantile_sketch_ledger_equals_batch(spark, sf_dir):
     assert roots, "sketch stream left no scratch root"
     batches = glob.glob(os.path.join(roots[-1], "ledger", "batch=*"))
     assert len(batches) == 3
+    assert PHASE_WALLS["streaming_quantile_sketch"]["batches"] == 3
+
+
+def test_land_arrivals_one_file_per_value_in_order(spark, tmp_path):
+    """One parquet file per value, named <col><value>, holding exactly
+    that value's rows, with strictly increasing mtimes in ``values``
+    order; the staging dir is gone afterwards. A value with no rows
+    lands nothing and does not raise (ADVICE r12 #1)."""
+    import os
+
+    from flink_kmeans_spark.streaming.jobs import land_arrivals
+
+    df = spark.range(30).selectExpr("id", "id % 3 AS shard")
+    landing = str(tmp_path / "landing")
+    paths = list(land_arrivals(df, "shard", [2, 0, 1], landing))
+    assert [os.path.basename(p) for p in paths] == [
+        "shard2.parquet", "shard0.parquet", "shard1.parquet"
+    ]
+    assert sorted(os.listdir(landing)) == sorted(os.path.basename(p) for p in paths)
+    mtimes = [os.path.getmtime(p) for p in paths]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+    ids = sorted(r["id"] for r in spark.read.parquet(paths[0]).collect())
+    assert ids == list(range(2, 30, 3))
+    assert not os.path.exists(landing + "_stage")
+
+    landing2 = str(tmp_path / "landing2")
+    paths2 = list(land_arrivals(df.filter("shard != 1"), "shard", range(3), landing2))
+    assert paths2[1] is None
+    assert sorted(os.listdir(landing2)) == ["shard0.parquet", "shard2.parquet"]
+
+
+class _FakeQuery:
+    def __init__(self, finished, progress=()):
+        self.finished, self.recentProgress = finished, list(progress)
+        self.timeouts, self.stopped = [], False
+
+    def awaitTermination(self, timeout):
+        self.timeouts.append(timeout)
+        return self.finished
+
+    def stop(self):
+        self.stopped = True
+
+
+class _FakeWriter:
+    """The slice of DataStreamWriter that ``drain`` drives."""
+
+    def __init__(self, query, active=()):
+        from types import SimpleNamespace
+
+        self._spark = SimpleNamespace(streams=SimpleNamespace(active=list(active)))
+        self.query, self.options, self.triggers = query, {}, {}
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def trigger(self, **kwargs):
+        self.triggers.update(kwargs)
+        return self
+
+    def start(self):
+        return self.query
+
+
+def test_drain_timeout_stops_and_raises(monkeypatch):
+    from flink_kmeans_spark.session import PHASE_WALLS
+    from flink_kmeans_spark.streaming.jobs import drain
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT", "7")
+    q = _FakeQuery(finished=False)
+    w = _FakeWriter(q)
+    with pytest.raises(TimeoutError):
+        drain(w, "fake_timeout", "/ckpt/x", 0.0)
+    assert q.timeouts == [7] and q.stopped
+    assert w.options == {"checkpointLocation": "/ckpt/x"}
+    assert w.triggers == {"availableNow": True}
+    assert "fake_timeout" not in PHASE_WALLS
+
+
+def test_drain_records_phase_walls_and_refuses_concurrent_query():
+    from types import SimpleNamespace
+
+    from flink_kmeans_spark.session import PHASE_WALLS
+    from flink_kmeans_spark.streaming.jobs import drain
+
+    progress = [SimpleNamespace(numInputRows=n) for n in (5, 0, 2)]
+    q = _FakeQuery(finished=True, progress=progress)
+    drain(_FakeWriter(q), "fake_ok", "/ckpt/y", 0.0)
+    assert q.stopped
+    rec = PHASE_WALLS.pop("fake_ok")
+    assert rec["batches"] == 2 and rec["drain_s"] >= 0 and rec["scaffold_s"] > 0
+
+    busy = _FakeQuery(finished=True)
+    with pytest.raises(RuntimeError, match="already active"):
+        drain(_FakeWriter(busy, active=[object()]), "fake_busy", "/ckpt/z", 0.0)
+    assert busy.timeouts == [] and "fake_busy" not in PHASE_WALLS
+
+
+def test_checkpoint_resume_with_an_empty_arrival(spark, sf_dir, tmp_path):
+    """Only even event_ids: arrival 2 has no rows. The resume still
+    drains twice, the second drain reads nothing, and the sink holds
+    every event once (ADVICE r12 #1: this used to raise
+    FileNotFoundError)."""
+    from pyspark.sql import functions as F
+
+    from flink_kmeans_spark.session import PHASE_WALLS
+
+    evens = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+        F.col("event_id") % 2 == 0
+    )
+    evens.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
+    got = S.jobs.run_checkpoint_resume(spark, str(tmp_path))
+    assert sorted(r["event_id"] for r in got.collect()) == sorted(
+        r["event_id"] for r in evens.collect()
+    )
+    assert PHASE_WALLS["streaming_checkpoint_resume_arrival1"]["batches"] == 1
+    assert PHASE_WALLS["streaming_checkpoint_resume_arrival2"]["batches"] == 0
